@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared session configuration for Verify/Bench/tests. */
+/** Shared session configuration for the mains, the benchmark and the
+  * tests.
+  */
 object Sessions {
 
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
@@ -17,10 +19,6 @@ object Sessions {
       .config("spark.sql.warehouse.dir", Scratch.register(
         s"${System.getProperty("java.io.tmpdir")}/graft_warehouse_" +
           ProcessHandle.current().pid()))
-      // The corpus' events.ts is parquet TIMESTAMP(NANOS), which Spark 4
-      // rejects by default; read it as a long (nanos since epoch) and let
-      // Tables convert to a microsecond TimestampType.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Read parquet isAdjustedToUTC=false timestamps as session-TZ(UTC)
       // TimestampType, not TIMESTAMP_NTZ — keeps unix_millis()/calendar
       // functions applicable and matches the DuckDB oracle's naive reads.
@@ -29,9 +27,9 @@ object Sessions {
   /** Quiesce streaming machinery BEFORE a harness prints its final
     * artifact line and stops the session: the state-store maintenance
     * thread outlives `spark.stop()` and logs a WARN ("SparkEnv not
-    * active") at JVM shutdown — AFTER Bench's JSON line, which made the
-    * driver's tail parse return `parsed: null` (r12 finding #1). Stop
-    * the maintenance task explicitly and pin that logger to ERROR as a
+    * active") at JVM shutdown — AFTER the harness's last line, which
+    * breaks a parser that reads the last stdout line. Stop the
+    * maintenance task explicitly and pin that logger to ERROR as a
     * belt (a provider unloaded mid-stop can still race one message).
     */
   def quiesceStreaming(): Unit = {

@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** Loader for the driver corpus (TESTDATA.md): one parquet file per table
   * under the sf-specific testdata dir. Scans stay declarative so Catalyst
@@ -13,13 +11,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
-    // events.ts is parquet TIMESTAMP(NANOS); with
-    // spark.sql.legacy.parquet.nanosAsLong it arrives as a long of nanos —
-    // normalize to Spark's microsecond TimestampType.
-    if (name == "events" && df.schema("ts").dataType == LongType)
-      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else df
-  }
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.parquet(s"$dir/$name.parquet")
 }

@@ -25,10 +25,10 @@ private[graft] object TrainQueriesCore {
 
   /** Tracked one-shot checkpoint ([[graft.ops.Snap.tracked]]): every
     * `localCheckpoint` inside a QUERY BODY routes through here so the
-    * harness (Bench per trial, Verify per dump) releases the pinned
-    * blocks deterministically once the query's action completes —
-    * 263 queries × (warmup + 3 trials) otherwise accumulate stale
-    * blocks until a driver GC lets the ContextCleaner catch up.
+    * harness (Verify per dump, the benchmark per execution) releases
+    * the pinned blocks deterministically once the query's action
+    * completes — 326 queries in one session otherwise accumulate
+    * stale blocks until a driver GC lets the ContextCleaner catch up.
     * Session-fixture builders keep raw `localCheckpoint()`: their
     * state must survive the invoking query.
     */
@@ -2166,9 +2166,9 @@ private[graft] object TrainQueriesCore {
     * visible to the read-back.
     */
   private[graft] def qBinarySource(s: SparkSession, dir: String): DataFrame = {
-    // keyed by session AND source dir: Bench warms up on sf0.001 then
-    // times sf0.1 in one session — a dir-agnostic key would serve the
-    // warmup's 500 blobs to the 5000-doc trials
+    // keyed by session AND source dir: one session may read two
+    // corpus dirs (a warm-up at sf0.001, then sf0.1) — a dir-agnostic
+    // key would serve the first dir's 500 blobs to the 5000-doc reads
     val srcKey = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
     val out = Scratch.register(

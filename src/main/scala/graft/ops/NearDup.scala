@@ -380,7 +380,21 @@ object NearDup {
     * quadratic in the corpus, only in the capped posting-list length.
     */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, minJaccard: Double, maxDf: Long): DataFrame = {
+      n: Int, minJaccard: Double, maxDf: Long): DataFrame =
+    cappedGramPairs(docs, idCol, textCol, n, maxDf)
+      .withColumn("jaccard",
+        col("n_shared").cast("double") /
+          (col("__na") + col("__nb") - col("n_shared")).cast("double"))
+      .filter(col("jaccard") >= minJaccard)
+      .select("id_a", "id_b", "n_shared", "jaccard")
+
+  /** The df-capped inverted gram index both n-gram pair operators
+    * share: every unordered pair id_a < id_b with its count of shared
+    * kept grams `n_shared` and each side's kept-gram count (`__na`,
+    * `__nb`).
+    */
+  private def cappedGramPairs(docs: DataFrame, idCol: String,
+      textCol: String, n: Int, maxDf: Long): DataFrame = {
     // one split per row (bound to a column so CollapseProject cannot
     // inline it into the per-position gram lambda — SURVEY §7.3).
     // localCheckpoint: genuine fan-out — the gram stream feeds the df
@@ -418,19 +432,15 @@ object NearDup {
     val capped = grams.join(stop, Seq("__gh"), "left_anti")
       .localCheckpoint()
     val sizes = capped.groupBy("__id").agg(count(lit(1)).as("__n"))
-    val shared = capped.select(col("__id").as("id_a"), col("__gh"))
+    capped.select(col("__id").as("id_a"), col("__gh"))
       .join(capped.select(col("__id").as("id_b"), col("__gh")), "__gh")
       .filter(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("n_shared"))
-    shared
-      .join(sizes.select(col("__id").as("id_a"), col("__n").as("__na")), "id_a")
-      .join(sizes.select(col("__id").as("id_b"), col("__n").as("__nb")), "id_b")
-      .withColumn("jaccard",
-        col("n_shared").cast("double") /
-          (col("__na") + col("__nb") - col("n_shared")).cast("double"))
-      .filter(col("jaccard") >= minJaccard)
-      .select("id_a", "id_b", "n_shared", "jaccard")
+      .join(sizes.select(col("__id").as("id_a"), col("__n").as("__na")),
+        "id_a")
+      .join(sizes.select(col("__id").as("id_b"), col("__n").as("__nb")),
+        "id_b")
   }
 
   /** Directed near-CONTAINMENT pairs — the asymmetric member of the
@@ -449,28 +459,7 @@ object NearDup {
   def ngramContainmentPairs(docs: DataFrame, idCol: String,
       textCol: String, n: Int, minPct: Int, maxDf: Long): DataFrame = {
     require(minPct >= 1 && minPct <= 100, s"minPct out of range: $minPct")
-    // Widen.ifNarrow: same CPU-center rationale as [[ngramJaccardPairs]]
-    val grams = Widen.ifNarrow(docs)
-      .select(col(idCol).as("__id"), split(col(textCol), " ").as("__toks"))
-      .select(col("__id"),
-        explode(graft.ops.Contamination.wordGrams("__toks", n)).as("__gram"))
-      .select(col("__id"), md5(col("__gram")).as("__gh"))
-      .localCheckpoint()
-    val stop = grams.groupBy("__gh").agg(count(lit(1)).as("__df"))
-      .filter(col("__df") > maxDf)
-      .select("__gh")
-    val capped = grams.join(stop, Seq("__gh"), "left_anti")
-      .localCheckpoint()
-    val sizes = capped.groupBy("__id").agg(count(lit(1)).as("__n"))
-    val shared = capped.select(col("__id").as("id_a"), col("__gh"))
-      .join(capped.select(col("__id").as("id_b"), col("__gh")), "__gh")
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_shared"))
-      .join(sizes.select(col("__id").as("id_a"), col("__n").as("__na")),
-        "id_a")
-      .join(sizes.select(col("__id").as("id_b"), col("__n").as("__nb")),
-        "id_b")
+    val shared = cappedGramPairs(docs, idCol, textCol, n, maxDf)
     def directed(contained: String, container: String,
         nCol: String): DataFrame = shared
       .filter(col("n_shared") * 100 >= lit(minPct) * col(nCol))

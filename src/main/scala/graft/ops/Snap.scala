@@ -58,7 +58,7 @@ object Snap {
     if (rdd != null) rdd.unpersist(blocking = false)
 
   // -------------------------------------------------------------------
-  // Tracked one-shot checkpoints (the Bench/Verify lifecycle)
+  // Tracked one-shot checkpoints (the Verify/benchmark lifecycle)
   // -------------------------------------------------------------------
 
   private val trackedHandles = new java.util.concurrent
@@ -77,12 +77,12 @@ object Snap {
     * unreferenced the ContextCleaner reclaims the blocks exactly as it
     * would for an untracked checkpoint. One-shot query bodies route
     * their checkpoints here (via `TrainQueries.snap`) so a harness
-    * that invokes hundreds of queries per session — Bench runs
-    * 263 × (warmup + 3 trials) — releases each invocation's blocks as
+    * that invokes hundreds of queries per session — Verify dumps all
+    * 326 in one — releases each invocation's blocks as
     * soon as its action completes, instead of waiting for the
     * ContextCleaner to notice the dropped reference after a driver GC
     * (the block-manager store fills with stale MEMORY_AND_DISK blocks
-    * in the meantime — eviction + GC pressure exactly where the bench
+    * in the meantime — eviction + GC pressure exactly where the run
     * is deepest). SESSION FIXTURES must NOT come through here: their
     * checkpoints outlive the invoking query by design (raw
     * `localCheckpoint()` — a drained fixture would be unrecomputable,

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.col
 
 /** Scale-adaptive scan widening for CPU-heavy scan-local pipelines
   * (guide §2: derive partitioning from data, never from a constant
@@ -34,18 +35,22 @@ import org.apache.spark.sql.DataFrame
   */
 object Widen {
 
-  /** `df`, repartitioned to the default parallelism when its estimated
+  private def cores(df: DataFrame): Int =
+    df.sparkSession.sparkContext.defaultParallelism
+
+  /** The one guard every size-based form shares: `df`'s estimated
     * input size is below `cores × 4 MiB` (the open-cost split floor:
-    * smaller inputs provably scanned at fewer-than-cores tasks);
-    * unchanged otherwise.
+    * smaller inputs provably scanned at fewer-than-cores tasks).
     */
-  def ifNarrow(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val want = sc.defaultParallelism
-    val floor = BigInt(want.toLong * (4L << 20))
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est < floor) df.repartition(want) else df
-  }
+  private def narrow(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <
+      BigInt(cores(df).toLong * (4L << 20))
+
+  /** `df`, repartitioned to the default parallelism when it is
+    * [[narrow]]; unchanged otherwise.
+    */
+  def ifNarrow(df: DataFrame): DataFrame =
+    if (narrow(df)) df.repartition(cores(df)) else df
 
   /** Keyed form of [[ifNarrow]] for the exchange FEEDING an exploding
     * self-join (banded LSH candidates: KB of band rows in, millions of
@@ -60,13 +65,8 @@ object Widen {
     * narrow; identity at production scale, where the bytes-proxy is
     * honest again.
     */
-  def byKeyIfNarrow(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val want = sc.defaultParallelism
-    val floor = BigInt(want.toLong * (4L << 20))
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est < floor) df.repartition(want, keys: _*) else df
-  }
+  def byKeyIfNarrow(df: DataFrame, keys: Column*): DataFrame =
+    if (narrow(df)) df.repartition(cores(df), keys: _*) else df
 
   /** Range form of [[byKeyIfNarrow]] for exact-rank sorts: the
     * adaptive range exchange is AQE-coalesced to a handful of tasks on
@@ -77,43 +77,25 @@ object Widen {
     * otherwise. Consumers must be partition-count-agnostic (the
     * percentile offset arithmetic is exact per partition id).
     */
-  def byRangeIfNarrow(df: DataFrame,
-      keys: org.apache.spark.sql.Column*): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val want = sc.defaultParallelism
-    val floor = BigInt(want.toLong * (4L << 20))
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est < floor) df.repartitionByRange(want, keys: _*)
+  def byRangeIfNarrow(df: DataFrame, keys: Column*): DataFrame =
+    if (narrow(df)) df.repartitionByRange(cores(df), keys: _*)
     else df.repartitionByRange(keys: _*)
-  }
 
-  /** The keyed-repartition form: many query bodies hash-place docs by
-    * id (`repartition(col("doc_id"))`) exactly so the CPU-heavy
-    * per-doc stage above it (shingling, synthetic media decode)
-    * parallelizes — but an ADAPTIVE keyed repartition is coalesced by
-    * AQE's bytes-proxy to 1–2 partitions on a KB-scale corpus,
-    * serializing that stage and every scan-local consumer of the
-    * checkpoint above it (JobProfile r17: the canon/weighted-jaccard
-    * family's 1.7–2.2 s checkpoint jobs ran 1–4 tasks at 32 idle
-    * cores). When the input is provably narrow, pin the count to core
-    * width (explicit-count keyed repartition — AQE-exempt); otherwise
-    * keep the adaptive form, which is correct at scale.
-    */
-  def keyed(df: DataFrame,
-      keys: org.apache.spark.sql.Column*): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val want = sc.defaultParallelism
-    val floor = BigInt(want.toLong * (4L << 20))
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est < floor) df.repartition(want, keys: _*)
-    else df.repartition(keys: _*)
-  }
-
-  /** `transform`-ready [[keyed]] on the corpus id — the 46
-    * `repartition(col("doc_id"))` query-body sites.
+  /** `transform`-ready keyed repartition on the corpus id: many query
+    * bodies hash-place docs by id exactly so the CPU-heavy per-doc
+    * stage above it (shingling, synthetic media decode) parallelizes —
+    * but an ADAPTIVE keyed repartition is coalesced by AQE's
+    * bytes-proxy to 1–2 partitions on a KB-scale corpus, serializing
+    * that stage and every scan-local consumer of the checkpoint above
+    * it (JobProfile r17: the canon/weighted-jaccard family's 1.7–2.2 s
+    * checkpoint jobs ran 1–4 tasks at 32 idle cores). When the input
+    * is provably narrow, pin the count to core width (explicit-count
+    * keyed repartition — AQE-exempt); otherwise keep the adaptive
+    * form, which is correct at scale.
     */
   def byDocId(df: DataFrame): DataFrame =
-    keyed(df, org.apache.spark.sql.functions.col("doc_id"))
+    if (narrow(df)) df.repartition(cores(df), col("doc_id"))
+    else df.repartition(col("doc_id"))
 
   /** Partition-count form of [[ifNarrow]] for frames whose size
     * statistics are unreliable — `foreachBatch` micro-batches, whose
@@ -125,9 +107,9 @@ object Widen {
     * scan) and passes through untouched.
     */
   def ifFewPartitions(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val want = sc.defaultParallelism
-    val have = df.queryExecution.toRdd.getNumPartitions
-    if (have * 2 <= want) df.repartition(want) else df
+    val want = cores(df)
+    if (df.queryExecution.toRdd.getNumPartitions * 2 <= want)
+      df.repartition(want)
+    else df
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.Audio
 
@@ -107,17 +106,13 @@ object AudioDedupGate {
   def run(spark: SparkSession, mediaParquet: String, index: DataFrame,
       chunks: Int = 3, maxHamming: Int = 8,
       stop: Option[DataFrame] = None): DataFrame =
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (media, tag) = Staging.stageSplitAndRead(spark, mediaParquet,
-      "graft_audiogate_in", chunks, orderCols = Seq("doc_id"))
-    val tmp = System.getProperty("java.io.tmpdir")
-    val root = graft.Scratch.register(s"$tmp/graft_audiogate_state_$tag")
-    val ck = graft.Scratch.register(s"$tmp/graft_audiogate_ck_$tag")
-    runInto(spark, media, index, root, ck, maxHamming, stop)
-    VersionedStore.readAllBelow(spark, s"$root/matches", Long.MaxValue)
-      .getOrElse(emptyMatches(spark))
-      .orderBy("doc_id", "hist_id")
-  }
+    Staging.gate(spark, mediaParquet, "graft_audiogate", chunks,
+        Seq("doc_id")) { (media, root, ck) =>
+      runInto(spark, media, index, root, ck, maxHamming, stop)
+      VersionedStore.readAllBelow(spark, s"$root/matches", Long.MaxValue)
+        .getOrElse(emptyMatches(spark))
+        .orderBy("doc_id", "hist_id")
+    }
 
   /** The pipeline against a caller-owned state root and checkpoint —
     * the restart surface: committed batches never re-probe,
@@ -125,20 +120,12 @@ object AudioDedupGate {
     */
   def runInto(spark: SparkSession, media: DataFrame, index: DataFrame,
       stateRoot: String, checkpoint: String,
-      maxHamming: Int = 8, stop: Option[DataFrame] = None): Unit = {
-    val query = media.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          VersionedStore.write(
-            batchMatches(spark, batch, index, maxHamming, stop),
-            s"$stateRoot/matches", batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      maxHamming: Int = 8, stop: Option[DataFrame] = None): Unit =
+    Staging.drain(media, checkpoint) { (batch, batchId) =>
+      VersionedStore.write(
+        batchMatches(spark, batch, index, maxHamming, stop),
+        s"$stateRoot/matches", batchId)
+    }
 
   /** One batch's matches: decode + fingerprint scan-locally, band
     * probe, hamming verify. Public so specs can assert streamed ≡

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.Classifier
 
@@ -31,17 +30,13 @@ object ClassifierGate {
     */
   def run(spark: SparkSession, docsParquet: String, votes: DataFrame,
       chunks: Int = 3, threshold: Long = 0L): DataFrame =
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (docs, tag) = Staging.stageSplitAndRead(spark, docsParquet,
-      "graft_clfgate_in", chunks, orderCols = Seq("doc_id"))
-    val tmp = System.getProperty("java.io.tmpdir")
-    val root = graft.Scratch.register(s"$tmp/graft_clfgate_state_$tag")
-    val ck = graft.Scratch.register(s"$tmp/graft_clfgate_ck_$tag")
-    runInto(spark, docs, votes, root, ck, threshold)
-    VersionedStore.readAllBelow(spark, s"$root/verdicts", Long.MaxValue)
-      .getOrElse(emptyVerdicts(spark))
-      .orderBy("doc_id")
-  }
+    Staging.gate(spark, docsParquet, "graft_clfgate", chunks,
+        Seq("doc_id")) { (docs, root, ck) =>
+      runInto(spark, docs, votes, root, ck, threshold)
+      VersionedStore.readAllBelow(spark, s"$root/verdicts", Long.MaxValue)
+        .getOrElse(emptyVerdicts(spark))
+        .orderBy("doc_id")
+    }
 
   /** The pipeline against a caller-owned state root and checkpoint —
     * the restart surface, same contract as [[LmScreen.runInto]]:
@@ -50,19 +45,11 @@ object ClassifierGate {
     */
   def runInto(spark: SparkSession, docs: DataFrame, votes: DataFrame,
       stateRoot: String, checkpoint: String,
-      threshold: Long = 0L): Unit = {
-    val query = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          VersionedStore.write(batchVerdicts(batch, votes, threshold),
-            s"$stateRoot/verdicts", batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      threshold: Long = 0L): Unit =
+    Staging.drain(docs, checkpoint) { (batch, batchId) =>
+      VersionedStore.write(batchVerdicts(batch, votes, threshold),
+        s"$stateRoot/verdicts", batchId)
+    }
 
   /** One batch's verdicts: tokenize scan-locally, score against the
     * broadcast vote model, admit on score > `threshold` — 0 is the

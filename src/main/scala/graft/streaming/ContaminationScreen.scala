@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.{Blooms, ParagraphDedup}
 
@@ -35,18 +34,14 @@ object ContaminationScreen {
   def run(spark: SparkSession, docsParquet: String, evalPath: String,
       bloom: Array[Byte], docFilter: Column = lit(true),
       parLen: Int = 20, chunks: Int = 3): DataFrame =
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (docs, tag) = Staging.stageSplitAndRead(spark, docsParquet,
-      "graft_contam_in", chunks, orderCols = Seq("doc_id"))
-    val tmp = System.getProperty("java.io.tmpdir")
-    val root = graft.Scratch.register(s"$tmp/graft_contam_state_$tag")
-    val ck = graft.Scratch.register(s"$tmp/graft_contam_ck_$tag")
-    runInto(spark, docs.filter(docFilter), evalPath, bloom, root, ck,
-      parLen)
-    VersionedStore.readAllBelow(spark, s"$root/verdicts", Long.MaxValue)
-      .getOrElse(emptyVerdicts(spark))
-      .orderBy("doc_id")
-  }
+    Staging.gate(spark, docsParquet, "graft_contam", chunks,
+        Seq("doc_id")) { (docs, root, ck) =>
+      runInto(spark, docs.filter(docFilter), evalPath, bloom, root, ck,
+        parLen)
+      VersionedStore.readAllBelow(spark, s"$root/verdicts", Long.MaxValue)
+        .getOrElse(emptyVerdicts(spark))
+        .orderBy("doc_id")
+    }
 
   /** The pipeline against a caller-owned state root
     * (`<root>/verdicts` append store) and checkpoint — the restart
@@ -56,16 +51,8 @@ object ContaminationScreen {
       bloom: Array[Byte], stateRoot: String, checkpoint: String,
       parLen: Int): Unit = {
     require(bloom.nonEmpty, "bloom filter bytes must be non-empty")
-    val query = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(spark, stateRoot, evalPath, bloom, batch, batchId,
-          parLen)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    Staging.drain(docs, checkpoint)(
+      foldBatch(spark, stateRoot, evalPath, bloom, _, _, parLen))
   }
 
   /** One ingest: this batch's paragraph fingerprints → scan-local
@@ -75,18 +62,16 @@ object ContaminationScreen {
   private def foldBatch(spark: SparkSession, stateRoot: String,
       evalPath: String, bloom: Array[Byte], batch: DataFrame,
       batchId: Long, parLen: Int): Unit = {
-    if (!batch.isEmpty) {
-      val fps = ParagraphDedup
-        .paragraphs(batch, "doc_id", "text", parLen)
-        .select(col("doc_id"), md5(graft.expressions.UnicodeNormalize.nfc(col("para"))).as("fp"))
-        .distinct()
-      val verdicts = fps
-        .filter(Blooms.mightContain(bloom, col("fp")))
-        .join(broadcast(spark.read.parquet(evalPath)), Seq("fp"),
-          "left_semi")
-        .groupBy("doc_id").agg(count(lit(1)).as("n_hit_paras"))
-      VersionedStore.write(verdicts, s"$stateRoot/verdicts", batchId)
-    }
+    val fps = ParagraphDedup
+      .paragraphs(batch, "doc_id", "text", parLen)
+      .select(col("doc_id"), md5(graft.expressions.UnicodeNormalize.nfc(col("para"))).as("fp"))
+      .distinct()
+    val verdicts = fps
+      .filter(Blooms.mightContain(bloom, col("fp")))
+      .join(broadcast(spark.read.parquet(evalPath)), Seq("fp"),
+        "left_semi")
+      .groupBy("doc_id").agg(count(lit(1)).as("n_hit_paras"))
+    VersionedStore.write(verdicts, s"$stateRoot/verdicts", batchId)
   }
 
   private def emptyVerdicts(spark: SparkSession): DataFrame =

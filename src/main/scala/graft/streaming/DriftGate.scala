@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.Drift
 
@@ -42,41 +41,29 @@ object DriftGate {
       buckets: Int, alertPpm: Long,
       docFilter: org.apache.spark.sql.Column = lit(true),
       chunks: Int = 3): DataFrame =
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (docs, tag) = Staging.stageSplitAndRead(spark, docsParquet,
-      "graft_driftgate_in", chunks, orderCols = Seq("doc_id"))
-    val tmp = System.getProperty("java.io.tmpdir")
-    val root = graft.Scratch.register(s"$tmp/graft_driftgate_state_$tag")
-    val ck = graft.Scratch.register(s"$tmp/graft_driftgate_ck_$tag")
-    runInto(spark, docs.filter(docFilter), baseline, buckets, alertPpm,
-      root, ck)
-    VersionedStore.readAllBelow(spark, s"$root/rates", Long.MaxValue)
-      .getOrElse(emptyRates(spark))
-      .orderBy("batch_id")
-  }
+    Staging.gate(spark, docsParquet, "graft_driftgate", chunks,
+        Seq("doc_id")) { (docs, root, ck) =>
+      runInto(spark, docs.filter(docFilter), baseline, buckets, alertPpm,
+        root, ck)
+      VersionedStore.readAllBelow(spark, s"$root/rates", Long.MaxValue)
+        .getOrElse(emptyRates(spark))
+        .orderBy("batch_id")
+    }
 
   /** The pipeline against a caller-owned state root and checkpoint —
     * the restart surface.
     */
   def runInto(spark: SparkSession, docs: DataFrame, baseline: DataFrame,
       buckets: Int, alertPpm: Long, stateRoot: String,
-      checkpoint: String): Unit = {
-    val query = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          VersionedStore.write(
-            batchDrift(batch, baseline, buckets, alertPpm)
-              .select(lit(batchId).as("batch_id"), col("n_tokens"),
-                col("drifted_buckets"), col("drift_ppm"),
-                col("drift_alert")),
-            s"$stateRoot/rates", batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      checkpoint: String): Unit =
+    Staging.drain(docs, checkpoint) { (batch, batchId) =>
+      VersionedStore.write(
+        batchDrift(batch, baseline, buckets, alertPpm)
+          .select(lit(batchId).as("batch_id"), col("n_tokens"),
+            col("drifted_buckets"), col("drift_ppm"),
+            col("drift_alert")),
+        s"$stateRoot/rates", batchId)
+    }
 
   /** One batch's drift row (sans batch id): the q232 statistic against
     * the stored baseline. Public so specs can assert the arithmetic

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.FuzzyJoin
 
@@ -39,53 +38,39 @@ object FuzzyNameIndex {
   def run(spark: SparkSession, namesParquet: String, nameCol: String,
       indexPath: String, arrivalFilter: org.apache.spark.sql.Column,
       chunks: Int = 3): DataFrame =
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (rows, tag) = Staging.stageSplitAndRead(spark, namesParquet,
-      "graft_fuzzy_in", chunks, orderCols = Seq(nameCol))
-    val tmp = System.getProperty("java.io.tmpdir")
-    val root = graft.Scratch.register(s"$tmp/graft_fuzzy_state_$tag")
-    val ck = graft.Scratch.register(s"$tmp/graft_fuzzy_ck_$tag")
-    runInto(spark, rows.filter(arrivalFilter), nameCol, indexPath,
-      root, ck)
-    VersionedStore.readAllBelow(spark, s"$root/matches", Long.MaxValue)
-      .getOrElse(emptyMatches(spark))
-      .orderBy("arr_name", "hist_name")
-  }
+    Staging.gate(spark, namesParquet, "graft_fuzzy", chunks,
+        Seq(nameCol)) { (rows, root, ck) =>
+      runInto(spark, rows.filter(arrivalFilter), nameCol, indexPath,
+        root, ck)
+      VersionedStore.readAllBelow(spark, s"$root/matches", Long.MaxValue)
+        .getOrElse(emptyMatches(spark))
+        .orderBy("arr_name", "hist_name")
+    }
 
   /** The pipeline against a caller-owned state root (`<root>/matches`
     * append store) and checkpoint — the restart surface, same
     * contract as [[NearDupIndex.runInto]].
     */
   def runInto(spark: SparkSession, rows: DataFrame, nameCol: String,
-      indexPath: String, stateRoot: String, checkpoint: String): Unit = {
-    val query = rows.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(spark, indexPath, batch, nameCol, stateRoot, batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      indexPath: String, stateRoot: String, checkpoint: String): Unit =
+    Staging.drain(rows, checkpoint)(
+      foldBatch(spark, indexPath, _, nameCol, stateRoot, _))
 
   private def foldBatch(spark: SparkSession, indexPath: String,
       batch: DataFrame, nameCol: String, stateRoot: String,
       batchId: Long): Unit = {
-    if (!batch.isEmpty) {
-      val idx = spark.read.parquet(indexPath)
-      val cand = batch.select(col(nameCol).as("arr_name")).distinct()
-        .withColumn("__var",
-          explode(FuzzyJoin.deletionVariants("arr_name")))
-        .join(idx, Seq("__var"))
-        .select(col("arr_name"), col("name").as("hist_name"))
-        .dropDuplicates("arr_name", "hist_name")
-      val matches = cand
-        .withColumn("dist",
-          levenshtein(col("arr_name"), col("hist_name")).cast("long"))
-        .filter(col("dist") <= 1)
-      VersionedStore.write(matches, s"$stateRoot/matches", batchId)
-    }
+    val idx = spark.read.parquet(indexPath)
+    val cand = batch.select(col(nameCol).as("arr_name")).distinct()
+      .withColumn("__var",
+        explode(FuzzyJoin.deletionVariants("arr_name")))
+      .join(idx, Seq("__var"))
+      .select(col("arr_name"), col("name").as("hist_name"))
+      .dropDuplicates("arr_name", "hist_name")
+    val matches = cand
+      .withColumn("dist",
+        levenshtein(col("arr_name"), col("hist_name")).cast("long"))
+      .filter(col("dist") <= 1)
+    VersionedStore.write(matches, s"$stateRoot/matches", batchId)
   }
 
   private def emptyMatches(spark: SparkSession): DataFrame =

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.DedupClusters
 
@@ -55,19 +54,13 @@ object IncrementalClusters {
     */
   def runWithHistory(spark: SparkSession, edgesParquet: String,
       chunks: Int = 3): (DataFrame, String) =
-      // quotient-CC joins are batch-sized; 4 partitions sized to state,
-      // not scan width (the q122 discipline)
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (edges, tag) = Staging.stageSplitAndRead(spark, edgesParquet,
-      "graft_incrcc_in", chunks, orderCols = Seq("id_a", "id_b"))
-    val tmp = System.getProperty("java.io.tmpdir")
-    val labDir = graft.Scratch.register(s"$tmp/graft_incrcc_lab_$tag")
-    val ck = graft.Scratch.register(s"$tmp/graft_incrcc_ck_$tag")
-    runInto(spark, edges, labDir, ck)
-    (DedupClusters.withSizes(
-        currentLabels(spark, labDir).getOrElse(emptyLabels(spark)))
-      .orderBy("doc_id"), labDir)
-  }
+    Staging.gate(spark, edgesParquet, "graft_incrcc", chunks,
+        Seq("id_a", "id_b")) { (edges, labDir, ck) =>
+      runInto(spark, edges, labDir, ck)
+      (DedupClusters.withSizes(
+          currentLabels(spark, labDir).getOrElse(emptyLabels(spark)))
+        .orderBy("doc_id"), labDir)
+    }
 
   /** The pipeline against CALLER-OWNED label-store and checkpoint
     * locations — the restart surface: stop, add files, call again with
@@ -76,17 +69,8 @@ object IncrementalClusters {
     * (StreamIncrClustersSpec drives exactly that).
     */
   def runInto(spark: SparkSession, edges: DataFrame, labDir: String,
-      checkpoint: String): Unit = {
-    val query = edges.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(spark, labDir, batch, batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      checkpoint: String): Unit =
+    Staging.drain(edges, checkpoint)(foldBatch(spark, labDir, _, _))
 
   /** One ingest: fold `batch`'s edges into the latest stored labeling
     * strictly below `batchId` and write version `batchId`. Reading
@@ -96,17 +80,15 @@ object IncrementalClusters {
     */
   private def foldBatch(spark: SparkSession, labDir: String,
       batch: DataFrame, batchId: Long): Unit = {
-    if (!batch.isEmpty) {
-      // labels are SNAPSHOT state: each version is the full folded
-      // labeling, so a batch reads the one latest version below its id
-      // (the VersionedStore replay discipline)
-      val prev = VersionedStore.latestBelow(spark, labDir, batchId)
-        .map(p => spark.read.parquet(p))
-        .getOrElse(emptyLabels(spark))
-      VersionedStore.write(
-        DedupClusters.incrementalComponents(prev, batch, "id_a", "id_b"),
-        labDir, batchId)
-    }
+    // labels are SNAPSHOT state: each version is the full folded
+    // labeling, so a batch reads the one latest version below its id
+    // (the VersionedStore replay discipline)
+    val prev = VersionedStore.latestBelow(spark, labDir, batchId)
+      .map(p => spark.read.parquet(p))
+      .getOrElse(emptyLabels(spark))
+    VersionedStore.write(
+      DedupClusters.incrementalComponents(prev, batch, "id_a", "id_b"),
+      labDir, batchId)
   }
 
   /** The current labeling = the highest committed version. */

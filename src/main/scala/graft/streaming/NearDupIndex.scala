@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.functions.TextFns
 import graft.ops.NearDup
@@ -52,36 +51,22 @@ object NearDupIndex {
     */
   def run(spark: SparkSession, docsParquet: String, chunks: Int = 3,
       minEstJaccard: Double = 0.5): DataFrame =
-      // probe/verdict joins are batch-sized; 4 partitions sized to
-      // state, not scan width (the q122 discipline)
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (docs, tag) = Staging.stageSplitAndRead(spark, docsParquet,
-      "graft_ndidx_in", chunks, orderCols = Seq("doc_id"))
-    val tmp = System.getProperty("java.io.tmpdir")
-    val root = graft.Scratch.register(s"$tmp/graft_ndidx_state_$tag")
-    val ck = graft.Scratch.register(s"$tmp/graft_ndidx_ck_$tag")
-    runInto(spark, docs, root, ck, minEstJaccard)
-    VersionedStore.readAllBelow(spark, s"$root/verdicts", Long.MaxValue)
-      .getOrElse(emptyVerdicts(spark))
-      .orderBy("doc_id")
-  }
+    Staging.gate(spark, docsParquet, "graft_ndidx", chunks,
+        Seq("doc_id")) { (docs, root, ck) =>
+      runInto(spark, docs, root, ck, minEstJaccard)
+      VersionedStore.readAllBelow(spark, s"$root/verdicts", Long.MaxValue)
+        .getOrElse(emptyVerdicts(spark))
+        .orderBy("doc_id")
+    }
 
   /** The pipeline against a caller-owned state root (`<root>/bands`,
     * `<root>/sigs`, `<root>/verdicts`) and checkpoint — the restart
     * surface, same contract as [[IncrementalClusters.runInto]].
     */
   def runInto(spark: SparkSession, docs: DataFrame, stateRoot: String,
-      checkpoint: String, minEstJaccard: Double = 0.5): Unit = {
-    val query = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(spark, stateRoot, batch, batchId, minEstJaccard)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      checkpoint: String, minEstJaccard: Double = 0.5): Unit =
+    Staging.drain(docs, checkpoint)(
+      foldBatch(spark, stateRoot, _, _, minEstJaccard))
 
   /** One ingest: sign + band the batch, probe the stored index (all
     * versions strictly below this batchId), judge candidates in
@@ -90,59 +75,57 @@ object NearDupIndex {
     */
   private def foldBatch(spark: SparkSession, stateRoot: String,
       batch: DataFrame, batchId: Long, minEstJaccard: Double): Unit = {
-    if (!batch.isEmpty) {
-      // batch-sized tables, each consumed by 2–3 joins below — cache
-      // once (the q25 fan-out discipline; persist() so they can be
-      // RELEASED after the batch commits — a localCheckpoint's pinned
-      // RDD is unreachable through Dataset.rdd).
-      // Widen.ifFewPartitions: a staged chunk is ONE file, so the
-      // shingle+MinHash signing — the batch's CPU center — would run
-      // single-task at any core count (JobProfile r17: 3 × 1.5 s
-      // 1-task jobs = half of q131's wall); identity on a
-      // production-width batch
-      val sigs = NearDup.minHashSigs(
-          graft.ops.Widen.ifFewPartitions(batch)
-            .withColumn("shingles", TextFns.shingles("text", 5))
-            .select("doc_id", "shingles"),
-          "doc_id", "shingles", K, "sig")
-        .persist()
-      val bands = NearDup.bandRows(sigs, "doc_id", "sig", BANDS,
-        ROWS_PER_BAND, K).persist()
+    // batch-sized tables, each consumed by 2–3 joins below — cache
+    // once (the q25 fan-out discipline; persist() so they can be
+    // RELEASED after the batch commits — a localCheckpoint's pinned
+    // RDD is unreachable through Dataset.rdd).
+    // Widen.ifFewPartitions: a staged chunk is ONE file, so the
+    // shingle+MinHash signing — the batch's CPU center — would run
+    // single-task at any core count (JobProfile r17: 3 × 1.5 s
+    // 1-task jobs = half of q131's wall); identity on a
+    // production-width batch
+    val sigs = NearDup.minHashSigs(
+        graft.ops.Widen.ifFewPartitions(batch)
+          .withColumn("shingles", TextFns.shingles("text", 5))
+          .select("doc_id", "shingles"),
+        "doc_id", "shingles", K, "sig")
+      .persist()
+    val bands = NearDup.bandRows(sigs, "doc_id", "sig", BANDS,
+      ROWS_PER_BAND, K).persist()
 
-      // candidates: stored-index probe (hist id is the earlier side)
-      // ∪ within-batch self-collisions (id_a < id_b) — chunks are
-      // doc_id ranges, so every hist id < every batch id and "earlier"
-      // is exactly "smaller id" across both sources
-      val probed = VersionedStore
-        .readAllBelow(spark, s"$stateRoot/bands", batchId)
-        .map(hist => NearDup.crossCandidatePairs(bands, hist, "doc_id")
-          .select(col("hist_id").as("id_a"), col("new_id").as("id_b")))
-        .getOrElse(spark.range(0)
-          .select(col("id").as("id_a"), col("id").as("id_b")))
-      val cand = NearDup.candidatePairs(bands, "doc_id").union(probed)
+    // candidates: stored-index probe (hist id is the earlier side)
+    // ∪ within-batch self-collisions (id_a < id_b) — chunks are
+    // doc_id ranges, so every hist id < every batch id and "earlier"
+    // is exactly "smaller id" across both sources
+    val probed = VersionedStore
+      .readAllBelow(spark, s"$stateRoot/bands", batchId)
+      .map(hist => NearDup.crossCandidatePairs(bands, hist, "doc_id")
+        .select(col("hist_id").as("id_a"), col("new_id").as("id_b")))
+      .getOrElse(spark.range(0)
+        .select(col("id").as("id_a"), col("id").as("id_b")))
+    val cand = NearDup.candidatePairs(bands, "doc_id").union(probed)
 
-      // verification in signature space: id_b is always a batch doc
-      // (local sigs); id_a may be historical (stored sigs ∪ local)
-      val aSigs = VersionedStore
-        .readAllBelow(spark, s"$stateRoot/sigs", batchId)
-        .map(_.union(sigs)).getOrElse(sigs)
-      val verdicts = cand
-        .join(aSigs.select(col("doc_id").as("id_a"), col("sig").as("__sa")),
-          "id_a")
-        .join(sigs.select(col("doc_id").as("id_b"), col("sig").as("__sb")),
-          "id_b")
-        .filter(expr(NearDup.estimatedJaccardExpr("__sa", "__sb", K))
-          >= minEstJaccard)
-        .groupBy(col("id_b").as("doc_id"))
-        .agg(min("id_a").as("dup_of"))
+    // verification in signature space: id_b is always a batch doc
+    // (local sigs); id_a may be historical (stored sigs ∪ local)
+    val aSigs = VersionedStore
+      .readAllBelow(spark, s"$stateRoot/sigs", batchId)
+      .map(_.union(sigs)).getOrElse(sigs)
+    val verdicts = cand
+      .join(aSigs.select(col("doc_id").as("id_a"), col("sig").as("__sa")),
+        "id_a")
+      .join(sigs.select(col("doc_id").as("id_b"), col("sig").as("__sb")),
+        "id_b")
+      .filter(expr(NearDup.estimatedJaccardExpr("__sa", "__sb", K))
+        >= minEstJaccard)
+      .groupBy(col("id_b").as("doc_id"))
+      .agg(min("id_a").as("dup_of"))
 
-      VersionedStore.write(verdicts, s"$stateRoot/verdicts", batchId)
-      VersionedStore.write(bands, s"$stateRoot/bands", batchId)
-      VersionedStore.write(sigs.select("doc_id", "sig"),
-        s"$stateRoot/sigs", batchId)
-      bands.unpersist(blocking = false)
-      sigs.unpersist(blocking = false)
-    }
+    VersionedStore.write(verdicts, s"$stateRoot/verdicts", batchId)
+    VersionedStore.write(bands, s"$stateRoot/bands", batchId)
+    VersionedStore.write(sigs.select("doc_id", "sig"),
+      s"$stateRoot/sigs", batchId)
+    bands.unpersist(blocking = false)
+    sigs.unpersist(blocking = false)
   }
 
   private def emptyVerdicts(spark: SparkSession): DataFrame =

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.Contamination
 
@@ -40,33 +39,21 @@ object NoveltyMonitor {
     * gram counts and novelty in basis points, ordered. */
   def run(spark: SparkSession, docsParquet: String, histTable: String,
       docFilter: Column = lit(true), chunks: Int = 3): DataFrame =
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (docs, tag) = Staging.stageSplitAndRead(spark, docsParquet,
-      "graft_novmon_in", chunks, orderCols = Seq("doc_id"))
-    val tmp = System.getProperty("java.io.tmpdir")
-    val root = graft.Scratch.register(s"$tmp/graft_novmon_state_$tag")
-    val ck = graft.Scratch.register(s"$tmp/graft_novmon_ck_$tag")
-    runInto(spark, docs.filter(docFilter), histTable, root, ck)
-    VersionedStore.readAllBelow(spark, s"$root/rates", Long.MaxValue)
-      .getOrElse(emptyRates(spark))
-      .orderBy("batch_id", "source")
-  }
+    Staging.gate(spark, docsParquet, "graft_novmon", chunks,
+        Seq("doc_id")) { (docs, root, ck) =>
+      runInto(spark, docs.filter(docFilter), histTable, root, ck)
+      VersionedStore.readAllBelow(spark, s"$root/rates", Long.MaxValue)
+        .getOrElse(emptyRates(spark))
+        .orderBy("batch_id", "source")
+    }
 
   /** The pipeline against a caller-owned state root (`<root>/rates`
     * append store) and checkpoint — the restart surface.
     */
   def runInto(spark: SparkSession, docs: DataFrame, histTable: String,
-      stateRoot: String, checkpoint: String): Unit = {
-    val query = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(spark, stateRoot, histTable, batch, batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      stateRoot: String, checkpoint: String): Unit =
+    Staging.drain(docs, checkpoint)(
+      foldBatch(spark, stateRoot, histTable, _, _))
 
   /** Per-doc gram expansion for one batch/split: (source, gh) rows. */
   def gramHashes(batch: DataFrame): DataFrame =
@@ -133,12 +120,10 @@ object NoveltyMonitor {
 
   private def foldBatch(spark: SparkSession, stateRoot: String,
       histTable: String, batch: DataFrame, batchId: Long): Unit = {
-    if (!batch.isEmpty) {
-      val rates = noveltyCounts(spark, gramHashes(batch), histTable)
-        .select(lit(batchId).as("batch_id"), col("source"),
-          col("n_grams"), col("n_novel"), col("novelty_bp"))
-      VersionedStore.write(rates, s"$stateRoot/rates", batchId)
-    }
+    val rates = noveltyCounts(spark, gramHashes(batch), histTable)
+      .select(lit(batchId).as("batch_id"), col("source"),
+        col("n_grams"), col("n_novel"), col("novelty_bp"))
+    VersionedStore.write(rates, s"$stateRoot/rates", batchId)
   }
 
   private def emptyRates(spark: SparkSession): DataFrame =

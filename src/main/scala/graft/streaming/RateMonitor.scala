@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming ingest-rate state maintenance — the MONITORING member of
   * the deployable-composition family ([[IncrementalClusters]] folds a
@@ -33,32 +32,19 @@ object RateMonitor {
     */
   def run(spark: SparkSession, eventsParquet: String,
       chunks: Int = 3): DataFrame =
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (events, tag) = Staging.stageSplitAndRead(spark, eventsParquet,
-      "graft_rate_in", chunks)
-    val tmp = System.getProperty("java.io.tmpdir")
-    val root = graft.Scratch.register(s"$tmp/graft_rate_state_$tag")
-    val ck = graft.Scratch.register(s"$tmp/graft_rate_ck_$tag")
-    runInto(spark, events, root, ck)
-    currentBuckets(spark, root).getOrElse(emptyBuckets(spark))
-  }
+    Staging.gate(spark, eventsParquet, "graft_rate",
+        chunks) { (events, root, ck) =>
+      runInto(spark, events, root, ck)
+      currentBuckets(spark, root).getOrElse(emptyBuckets(spark))
+    }
 
   /** The pipeline against a caller-owned state root (`<root>/buckets`
     * snapshot store) and checkpoint — the restart surface, same
     * contract as [[IncrementalClusters.runInto]].
     */
   def runInto(spark: SparkSession, events: DataFrame, stateRoot: String,
-      checkpoint: String): Unit = {
-    val query = events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(spark, stateRoot, batch, batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      checkpoint: String): Unit =
+    Staging.drain(events, checkpoint)(foldBatch(spark, stateRoot, _, _))
 
   /** The latest committed bucket table, if any batch ever folded. */
   def currentBuckets(spark: SparkSession,
@@ -74,18 +60,16 @@ object RateMonitor {
     */
   private def foldBatch(spark: SparkSession, stateRoot: String,
       batch: DataFrame, batchId: Long): Unit = {
-    if (!batch.isEmpty) {
-      val partial = batch
-        .select(col("event_type"),
-          expr("unix_micros(ts) div 3600000000").as("hr"))
-        .groupBy("event_type", "hr").agg(count(lit(1)).as("cnt"))
-      val merged = VersionedStore
-        .latestBelow(spark, s"$stateRoot/buckets", batchId)
-        .map(p => spark.read.parquet(p).unionByName(partial)
-          .groupBy("event_type", "hr").agg(sum("cnt").as("cnt")))
-        .getOrElse(partial)
-      VersionedStore.write(merged, s"$stateRoot/buckets", batchId)
-    }
+    val partial = batch
+      .select(col("event_type"),
+        expr("unix_micros(ts) div 3600000000").as("hr"))
+      .groupBy("event_type", "hr").agg(count(lit(1)).as("cnt"))
+    val merged = VersionedStore
+      .latestBelow(spark, s"$stateRoot/buckets", batchId)
+      .map(p => spark.read.parquet(p).unionByName(partial)
+        .groupBy("event_type", "hr").agg(sum("cnt").as("cnt")))
+      .getOrElse(partial)
+    VersionedStore.write(merged, s"$stateRoot/buckets", batchId)
   }
 
   private def emptyBuckets(spark: SparkSession): DataFrame =

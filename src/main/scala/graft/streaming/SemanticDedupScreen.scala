@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.{KMeans, Similarity}
 
@@ -43,18 +42,14 @@ object SemanticDedupScreen {
       centroids: Array[Array[Long]], histAssigned: DataFrame,
       batchFilter: Column = lit(true), threshold: Double = 0.3,
       chunks: Int = 3): DataFrame =
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (vecs, tag) = Staging.stageSplitAndRead(spark, embParquet,
-      "graft_semdedup_in", chunks, orderCols = Seq("vec_id"))
-    val tmp = System.getProperty("java.io.tmpdir")
-    val root = graft.Scratch.register(s"$tmp/graft_semdedup_state_$tag")
-    val ck = graft.Scratch.register(s"$tmp/graft_semdedup_ck_$tag")
-    runInto(spark, vecs.filter(batchFilter), centroids, histAssigned,
-      threshold, root, ck)
-    VersionedStore.readAllBelow(spark, s"$root/verdicts", Long.MaxValue)
-      .getOrElse(emptyVerdicts(spark))
-      .orderBy("new_id", "hist_id")
-  }
+    Staging.gate(spark, embParquet, "graft_semdedup", chunks,
+        Seq("vec_id")) { (vecs, root, ck) =>
+      runInto(spark, vecs.filter(batchFilter), centroids, histAssigned,
+        threshold, root, ck)
+      VersionedStore.readAllBelow(spark, s"$root/verdicts", Long.MaxValue)
+        .getOrElse(emptyVerdicts(spark))
+        .orderBy("new_id", "hist_id")
+    }
 
   /** The pipeline against a caller-owned state root (`<root>/verdicts`
     * append store) and checkpoint — the restart surface
@@ -62,18 +57,12 @@ object SemanticDedupScreen {
     */
   def runInto(spark: SparkSession, vecs: DataFrame,
       centroids: Array[Array[Long]], histAssigned: DataFrame,
-      threshold: Double, stateRoot: String, checkpoint: String): Unit = {
-    val query = vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(stateRoot, centroids, histAssigned, threshold,
-          batch, batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      threshold: Double, stateRoot: String, checkpoint: String): Unit =
+    Staging.drain(vecs, checkpoint) { (batch, batchId) =>
+      VersionedStore.write(
+        batchVerdicts(batch, centroids, histAssigned, threshold),
+        s"$stateRoot/verdicts", batchId)
+    }
 
   /** One batch's verdict plan: scan-local cell assignment of the batch
     * (centroids as plan literals), then the in-cell exact cosine
@@ -101,16 +90,6 @@ object SemanticDedupScreen {
         col("__qna"), col("__qnb")))
       .filter(col("sim") >= threshold)
       .select(col("new_id"), col("hist_id"), col("cluster"), col("sim"))
-  }
-
-  /** One batch folded: verdicts committed as version `batchId`. */
-  private def foldBatch(stateRoot: String, centroids: Array[Array[Long]],
-      histAssigned: DataFrame, threshold: Double, batch: DataFrame,
-      batchId: Long): Unit = {
-    if (!batch.isEmpty)
-      VersionedStore.write(
-        batchVerdicts(batch, centroids, histAssigned, threshold),
-        s"$stateRoot/verdicts", batchId)
   }
 
   // -------------------------------------------------------------------
@@ -141,18 +120,14 @@ object SemanticDedupScreen {
       centroids: Array[Array[Long]], histAssigned: DataFrame,
       batchFilter: Column = lit(true), threshold: Double = 0.3,
       chunks: Int = 3): DataFrame =
-      Staging.withStreamShufflePartitions(spark, n = "4") {
-    val (vecs, tag) = Staging.stageSplitAndRead(spark, embParquet,
-      "graft_semdedupg_in", chunks, orderCols = Seq("vec_id"))
-    val tmp = System.getProperty("java.io.tmpdir")
-    val root = graft.Scratch.register(s"$tmp/graft_semdedupg_state_$tag")
-    val ck = graft.Scratch.register(s"$tmp/graft_semdedupg_ck_$tag")
-    runGrowingInto(spark, vecs.filter(batchFilter), centroids,
-      histAssigned, threshold, root, ck)
-    VersionedStore.readAllBelow(spark, s"$root/verdicts", Long.MaxValue)
-      .getOrElse(emptyGrowVerdicts(spark))
-      .orderBy("new_id", "other_id")
-  }
+    Staging.gate(spark, embParquet, "graft_semdedupg", chunks,
+        Seq("vec_id")) { (vecs, root, ck) =>
+      runGrowingInto(spark, vecs.filter(batchFilter), centroids,
+        histAssigned, threshold, root, ck)
+      VersionedStore.readAllBelow(spark, s"$root/verdicts", Long.MaxValue)
+        .getOrElse(emptyGrowVerdicts(spark))
+        .orderBy("new_id", "other_id")
+    }
 
   /** The growing pipeline against a caller-owned state root
     * (`<root>/verdicts` + `<root>/arrivals` append stores) and
@@ -160,59 +135,49 @@ object SemanticDedupScreen {
     */
   def runGrowingInto(spark: SparkSession, vecs: DataFrame,
       centroids: Array[Array[Long]], histAssigned: DataFrame,
-      threshold: Double, stateRoot: String, checkpoint: String): Unit = {
-    val query = vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldGrowingBatch(spark, stateRoot, centroids, histAssigned,
-          threshold, batch, batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      threshold: Double, stateRoot: String, checkpoint: String): Unit =
+    Staging.drain(vecs, checkpoint)(
+      foldGrowingBatch(spark, stateRoot, centroids, histAssigned, threshold,
+        _, _))
 
   private def foldGrowingBatch(spark: SparkSession, stateRoot: String,
       centroids: Array[Array[Long]], histAssigned: DataFrame,
       threshold: Double, batch: DataFrame, batchId: Long): Unit = {
-    if (!batch.isEmpty) {
-      val b = KMeans
-        .assignTo(Similarity.prepare(batch, "embedding"), "vec_id",
-          centroids)
-        .filter(col("qn") > 0)
-        .select(col("vec_id").as("new_id"), col("cluster"),
-          col("qv").as("__qva"), col("qn").as("__qna"))
-      // probe side: stored history ∪ arrivals of versions < batchId
-      // (read-below-own-id — a replayed batch sees the same state)
-      val probe = histAssigned
-        .select(col("hist_id").as("other_id"), col("cluster"),
-          col("qv").as("__qvb"), col("qn").as("__qnb"))
-        .unionByName(VersionedStore
-          .readAllBelow(spark, s"$stateRoot/arrivals", batchId)
-          .map(_.select(col("hist_id").as("other_id"), col("cluster"),
-            col("qv").as("__qvb"), col("qn").as("__qnb")))
-          .getOrElse(emptyArrivals(spark)))
-      // intra-batch pairs: the batch against itself, lower id as the
-      // "other" side (a < b emitted once, direction deterministic)
-      val bSelf = b.select(col("new_id").as("other_id"), col("cluster"),
-        col("__qva").as("__qvb"), col("__qna").as("__qnb"))
-      val paired = broadcast(b).join(probe, Seq("cluster"))
-        .unionByName(broadcast(b).join(bSelf, Seq("cluster"))
-          .filter(col("other_id") < col("new_id")))
-      val verdicts = paired
-        .withColumn("sim", Similarity.cosine(col("__qva"), col("__qvb"),
-          col("__qna"), col("__qnb")))
-        .filter(col("sim") >= threshold)
-        .select(col("new_id"), col("other_id"), col("cluster"), col("sim"))
-      VersionedStore.write(verdicts, s"$stateRoot/verdicts", batchId)
-      // append this batch's assignments — the probe side of every
-      // LATER batch (same schema as the stored history)
-      VersionedStore.write(
-        b.select(col("new_id").as("hist_id"), col("cluster"),
-          col("__qva").as("qv"), col("__qna").as("qn")),
-        s"$stateRoot/arrivals", batchId)
-    }
+    val b = KMeans
+      .assignTo(Similarity.prepare(batch, "embedding"), "vec_id",
+        centroids)
+      .filter(col("qn") > 0)
+      .select(col("vec_id").as("new_id"), col("cluster"),
+        col("qv").as("__qva"), col("qn").as("__qna"))
+    // probe side: stored history ∪ arrivals of versions < batchId
+    // (read-below-own-id — a replayed batch sees the same state)
+    val probe = histAssigned
+      .select(col("hist_id").as("other_id"), col("cluster"),
+        col("qv").as("__qvb"), col("qn").as("__qnb"))
+      .unionByName(VersionedStore
+        .readAllBelow(spark, s"$stateRoot/arrivals", batchId)
+        .map(_.select(col("hist_id").as("other_id"), col("cluster"),
+          col("qv").as("__qvb"), col("qn").as("__qnb")))
+        .getOrElse(emptyArrivals(spark)))
+    // intra-batch pairs: the batch against itself, lower id as the
+    // "other" side (a < b emitted once, direction deterministic)
+    val bSelf = b.select(col("new_id").as("other_id"), col("cluster"),
+      col("__qva").as("__qvb"), col("__qna").as("__qnb"))
+    val paired = broadcast(b).join(probe, Seq("cluster"))
+      .unionByName(broadcast(b).join(bSelf, Seq("cluster"))
+        .filter(col("other_id") < col("new_id")))
+    val verdicts = paired
+      .withColumn("sim", Similarity.cosine(col("__qva"), col("__qvb"),
+        col("__qna"), col("__qnb")))
+      .filter(col("sim") >= threshold)
+      .select(col("new_id"), col("other_id"), col("cluster"), col("sim"))
+    VersionedStore.write(verdicts, s"$stateRoot/verdicts", batchId)
+    // append this batch's assignments — the probe side of every
+    // LATER batch (same schema as the stored history)
+    VersionedStore.write(
+      b.select(col("new_id").as("hist_id"), col("cluster"),
+        col("__qva").as("qv"), col("__qna").as("qn")),
+      s"$stateRoot/arrivals", batchId)
   }
 
   private def emptyArrivals(spark: SparkSession): DataFrame =

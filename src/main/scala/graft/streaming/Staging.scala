@@ -5,13 +5,13 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.streaming.Trigger
 
 /** Shared file-stream staging: copy a single parquet file into a fresh
   * stream-input directory (file sources watch directories) and open a
-  * schema'd readStream over it, with the corpus' nanos-long `ts`
-  * normalized to a microsecond TimestampType exactly as the batch
-  * loader does (graft.Tables).
+  * schema'd readStream over it; plus the one code path every staged
+  * gate runs its stream through ([[gate]] opens a run, [[drain]] folds
+  * it).
   *
   * The returned tag is unique per *call* (appId + counter), so repeated
   * or concurrent streams in one session get distinct staging dirs and
@@ -177,23 +177,15 @@ object Staging {
   }
 
   /** Shared tail of both staging paths: derive the stream schema from a
-    * batch footer read of the staged dir, open the readStream, and
-    * normalize the corpus' nanos-long `ts` to a microsecond
-    * TimestampType exactly as the batch loader (graft.Tables) does —
-    * ONE copy of that rule for the streaming side.
+    * batch footer read of the staged dir and open the readStream.
     */
   private def schemaRead(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[String]): DataFrame = {
     val batchSchema = spark.read.parquet(dir).schema
     val reader = spark.readStream.schema(batchSchema)
-    val raw = maxFilesPerTrigger
+    maxFilesPerTrigger
       .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
       .parquet(dir)
-    // sources without a ts column (e.g. edge streams) pass through
-    if (batchSchema.fieldNames.contains("ts") &&
-        batchSchema("ts").dataType == LongType)
-      raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else raw
   }
 
   def stageAndRead(spark: SparkSession, srcParquet: String,
@@ -208,4 +200,43 @@ object Staging {
 
     (schemaRead(spark, inDir.toString, maxFilesPerTrigger = None), tag)
   }
+
+  /** Open one staged gate run: scope the shuffle partitions to 4 (the
+    * gates' state is batch- or metadata-sized — the q122 discipline),
+    * split-stage `srcParquet` into `chunks` micro-batches under
+    * `${name}_in`, register the run's `${name}_state_<tag>` and
+    * `${name}_ck_<tag>` scratch dirs, and hand (input, stateRoot,
+    * checkpoint) to `body` — every gate's `run` is its `runInto` plus
+    * a read-back of the state root inside this window.
+    */
+  def gate[T](spark: SparkSession, srcParquet: String, name: String,
+      chunks: Int, orderCols: Seq[String] = Seq("ts", "event_id"))(
+      body: (DataFrame, String, String) => T): T =
+    withStreamShufflePartitions(spark, n = "4") {
+      val (input, tag) = stageSplitAndRead(spark, srcParquet,
+        s"${name}_in", chunks, orderCols)
+      val tmp = System.getProperty("java.io.tmpdir")
+      body(input, graft.Scratch.register(s"$tmp/${name}_state_$tag"),
+        graft.Scratch.register(s"$tmp/${name}_ck_$tag"))
+    }
+
+  /** Drain `input` to the end of what is staged (`AvailableNow`),
+    * calling `fold(batch, batchId)` once per NON-EMPTY micro-batch;
+    * blocks until done. The restart surface of every gate's
+    * `runInto`: a second call with the same `checkpoint` resumes after
+    * the last committed batch, and `fold` commits under the
+    * [[VersionedStore]] replay rule, so a re-executed batch rewrites
+    * only its own version.
+    */
+  def drain(input: DataFrame, checkpoint: String)(
+      fold: (DataFrame, Long) => Unit): Unit =
+    input.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) fold(batch, batchId)
+      }
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
 }
